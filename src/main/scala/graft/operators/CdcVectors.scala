@@ -142,6 +142,10 @@ object CdcVectors {
       val cbF = Future(trainCodebook(initial, m, subDim, iters, sampleN))
       val initF = cbF.map(cb =>
         initCodes(initial, cb, m, subDim, nShards, codesDir))
+      // settle all three before rethrowing the first failure: a failed
+      // staging must not leave initF writing codesDir while the
+      // caller's scratch cleanup runs
+      Seq(stagingF, initF, cbF).foreach(Await.ready(_, Duration.Inf))
       Await.result(stagingF, Duration.Inf)
       Await.result(initF, Duration.Inf)
       Await.result(cbF, Duration.Inf)

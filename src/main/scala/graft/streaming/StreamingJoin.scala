@@ -61,8 +61,12 @@ object StreamingJoin {
         unix_micros(col("v_ts")).as("vtsm"))
   }
 
-  /** Total state rows across the join's state operators at the end of
-    * the last completed run, for specs asserting watermark eviction.
+  /** Total state rows across the join's state operators as reported by
+    * the last micro-batch of the most recent [[attributionFromFiles]]
+    * run. That inner path runs without no-data batches, so the trailing
+    * eviction-only batch never runs: the total reflects eviction done
+    * by earlier data batches but is taken BEFORE the final watermark's
+    * eviction, not after it.
     */
   @volatile private[streaming] var lastStateRows: Long = -1L
 

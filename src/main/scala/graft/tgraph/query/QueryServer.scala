@@ -1,13 +1,16 @@
 package graft.tgraph.query
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.JobExecutionStatus
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 import java.io.{BufferedReader, InputStreamReader, PrintWriter}
 import java.net.{ServerSocket, Socket, SocketException}
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.Executors
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
+import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong, AtomicReference}
+import scala.util.control.NonFatal
 
 /** An out-of-process queryable-state endpoint — the analog of the
   * reference's query server stack (`runtime/QueryServer.java`,
@@ -24,12 +27,24 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
   * ([[StateQueries.streamingState]]). This server fronts it:
   *
   *  - A refresher thread watches the checkpoint's `commits/` log and,
-  *    when a new micro-batch lands, pins a fresh snapshot read AT THAT
-  *    BATCH ID and caches the (key → value) map driver-side. Every
-  *    answer is therefore **batch-consistent**: all rows in one
-  *    response reflect exactly one committed epoch, never a mix — the
-  *    watermark-consistency the reference gets from
-  *    `WatermarkAssigner` + `TotalOrderEnforcer`.
+  *    when batches up to `b` have landed, moves the driver-side
+  *    (key → value) map from its batch `p` to `b` by reading only the
+  *    state store's change feed for batches `p+1..b`
+  *    ([[StateQueries.streamingStateChanges]]; the per-batch changelog
+  *    RocksDB writes under changelog checkpointing, or the HDFS
+  *    provider's delta files) and applying it in batch order: a delete
+  *    removes the key, any other write sets it. Refresh cost follows
+  *    the change, not the state size. The first load, a salted
+  *    `mergeAgg` layout, a change feed that failed (a checkpoint
+  *    without change files, a range past retention: after one failure
+  *    the server stops trying it), a delta or an advanced map over
+  *    `maxStateRows`, and degraded mode
+  *    take one bounded whole-state pass pinned AT batch `b` instead (one
+  *    Spark job on an unsalted layout; each partition returns at most
+  *    `maxStateRows + 1` rows). Every answer is therefore
+  *    **batch-consistent**: all rows in one response reflect exactly
+  *    one committed epoch, never a mix — the watermark-consistency the
+  *    reference gets from `WatermarkAssigner` + `TotalOrderEnforcer`.
   *  - Point (`Query.addKey`) and predicate (`PredicateQuery`) requests
   *    are answered from that snapshot in microseconds, giving the
   *    reference's queries/s shape instead of a per-request Spark job.
@@ -170,43 +185,107 @@ final class QueryServer(
     mergeAgg.fold(raw)(agg => raw.groupBy(col("k")).agg(agg.as("v")))
   }
 
-  /** One snapshot load, pinned to a committed batch id so concurrent
-    * micro-batch progress can't tear the read. A state larger than
-    * `maxStateRows` flips the snapshot to degraded (distributed) mode
-    * instead of failing the refresher — the endpoint must keep serving.
+  /** Refreshes by kind: a change-feed delta applied to the cached map
+    * vs a whole-state pass (spec observability: a silent fallback is
+    * still exact but loses the incremental path's gain).
+    */
+  private[tgraph] val incrementalRefreshes = new AtomicLong(0)
+  private[tgraph] val fullRefreshes = new AtomicLong(0)
+
+  /** Set once the change feed has failed for this server's checkpoint
+    * (e.g. RocksDB without changelog checkpointing): from then on every
+    * refresh is a [[fullPass]], with no failing Spark job per refresh.
+    */
+  private val changeFeedFailed = new AtomicBoolean(false)
+
+  /** Move the snapshot to the newest committed batch `b`: a cached map
+    * at batch `p` advances by the change feed of batches `p+1..b`;
+    * every other case (the class doc lists them), and an advanced map
+    * over `maxStateRows`, takes [[fullPass]], which degrades.
     */
   private def refreshOnce(): Unit = {
+    val prev = current.get()
     val b = lastCommittedBatch
-    if (b > current.get().batchId) {
-      val df = pinnedState(b)
-      val n = df.count()
-      if (n <= maxStateRows) {
-        val m = df.collect().iterator
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        current.set(Snapshot(b, Some(m)))
-        warnedOversize.set(false)
-      } else {
-        if (warnedOversize.compareAndSet(false, true))
-          System.err.println(
-            s"[query-server] state has $n rows > maxStateRows=$maxStateRows; " +
-              "degrading to distributed per-request queries (a Spark job " +
-              "per request) until it shrinks back under the cap")
-        current.set(Snapshot(b, None))
+    if (b > prev.batchId && running.get()) {
+      val advanced = prev.state match {
+        case Some(m) if prev.batchId >= 0 && mergeAgg.isEmpty &&
+            !changeFeedFailed.get() =>
+          changesSince(prev.batchId, b).map(QueryServer.applyChanges(m, _))
+            .filter(_.size <= maxStateRows)
+        case _ => None
+      }
+      advanced match {
+        case Some(m) =>
+          incrementalRefreshes.incrementAndGet()
+          current.set(Snapshot(b, Some(m)))
+        case None =>
+          fullRefreshes.incrementAndGet()
+          fullPass(b)
       }
     }
   }
 
+  /** The writes of batches `p+1..b` as (isDelete, k, v) runs, one per
+    * state partition in commit order; None when they alone exceed
+    * `maxStateRows` or the feed fails (no change files, or retention
+    * won a race), which also turns the feed off for this server.
+    */
+  private def changesSince(p: Long, b: Long): Option[Seq[Array[Long]]] =
+    try QueryServer.boundedRuns(
+      StateQueries.streamingStateChanges(spark, checkpointLocation, p + 1, b)
+        .select((col("change_type") === "delete").as("d"), keyCol.as("k"),
+          coalesce(valueCol, lit(0L)).as("v")),
+      maxStateRows)
+    catch { case NonFatal(_) if running.get() =>
+      changeFeedFailed.set(true)
+      None
+    }
+
+  /** One bounded whole-state pass pinned at `b`. A state over
+    * `maxStateRows` flips the snapshot to degraded (distributed) mode
+    * instead of failing the refresher — the endpoint must keep serving.
+    */
+  private def fullPass(b: Long): Unit =
+    QueryServer.boundedRuns(pinnedState(b), maxStateRows) match {
+      case Some(runs) =>
+        val m = Map.newBuilder[Long, Long]
+        runs.foreach(a => (0 until a.length by 2).foreach(i => m += a(i) -> a(i + 1)))
+        current.set(Snapshot(b, Some(m.result())))
+        warnedOversize.set(false)
+      case None =>
+        if (warnedOversize.compareAndSet(false, true))
+          System.err.println(
+            s"[query-server] state has more than maxStateRows=$maxStateRows " +
+              "rows; degrading to distributed per-request queries (a Spark job " +
+              "per request) until it shrinks back under the cap")
+        current.set(Snapshot(b, None))
+    }
+
+  // Every Spark job this server starts carries `jobTag`, so close() can
+  // cancel them; threads started below inherit the caller's job group.
+  private val jobTag = s"graft-query-server-${java.util.UUID.randomUUID()}"
+  private val sc = spark.sparkContext
+  private val stop = new CountDownLatch(1)
+
+  /** One refresh on the caller's thread, under the server's job tag. */
+  private[tgraph] def refreshNow(): Unit = {
+    sc.addJobTag(jobTag)
+    try refreshOnce() finally sc.removeJobTag(jobTag)
+  }
+
   // Serve from the newest committed batch available at start (if any).
-  refreshOnce()
+  refreshNow()
 
   private val refresher = new Thread(() => {
-    while (running.get()) {
+    sc.addJobTag(jobTag)
+    var more = true
+    while (more) {
       try refreshOnce()
-      catch { case _: InterruptedException => case e: Throwable =>
-        System.err.println(s"[query-server] refresh failed: ${e.getMessage}")
+      catch { case e: Throwable =>
+        if (running.get())
+          System.err.println(s"[query-server] refresh failed: ${e.getMessage}")
       }
-      try Thread.sleep(refreshMillis)
-      catch { case _: InterruptedException => () }
+      more = !stop.await(refreshMillis, TimeUnit.MILLISECONDS)
     }
   }, "query-server-refresh")
   refresher.setDaemon(true)
@@ -493,6 +572,7 @@ final class QueryServer(
   }
 
   private val acceptor = new Thread(() => {
+    sc.addJobTag(jobTag) // the handler threads it spawns inherit the tag
     while (running.get()) {
       try {
         val sock = server.accept()
@@ -508,12 +588,87 @@ final class QueryServer(
   acceptor.setDaemon(true)
   acceptor.start()
 
+  /** Stops serving and refreshing. A refresh or degraded-mode request
+    * may be inside a Spark job: its jobs are cancelled by tag, and
+    * close() waits (bounded) until the refresher has exited and no job
+    * of this server still runs a task — so the caller may delete the
+    * checkpoint as soon as close() returns.
+    */
   override def close(): Unit = {
     running.set(false)
-    refresher.interrupt()
+    stop.countDown()
     try server.close() catch { case _: Throwable => () }
     pool.shutdownNow()
+    refresher.join(QueryServer.ClosePollMs)
+    val deadline = System.nanoTime() + QueryServer.CloseWaitMs * 1000000L
+    while ((refresher.isAlive || jobsActive) && System.nanoTime() < deadline) {
+      // repeated: a job may start between one cancel and the thread's exit
+      sc.cancelJobsWithTag(jobTag)
+      if (refresher.isAlive) refresher.join(QueryServer.ClosePollMs)
+      else Thread.sleep(QueryServer.ClosePollMs)
+    }
   }
+
+  /** Whether a job of this server is running or still has live tasks. */
+  private[tgraph] def jobsActive: Boolean = {
+    val st = sc.statusTracker
+    st.getJobIdsForTag(jobTag).iterator.flatMap(st.getJobInfo(_)).exists(j =>
+      j.status == JobExecutionStatus.RUNNING ||
+        j.stageIds.iterator.flatMap(st.getStageInfo(_)).exists(_.numActiveTasks > 0))
+  }
+}
+
+object QueryServer {
+  private val ClosePollMs = 20L
+  private val CloseWaitMs = 10000L
+
+  /** Runs `df` (columns castable to long) as ONE Spark job in which each
+    * partition returns at most `cap + 1` rows, packed row-major into one
+    * array per partition, each keeping its partition's row order. The
+    * driver drops what it holds once the running total passes `cap` and
+    * answers None, so its memory stays bounded by the cap.
+    */
+  private def boundedRuns(df: DataFrame, cap: Long): Option[Seq[Array[Long]]] = {
+    val longs = df.select(df.columns.map(c => col(c).cast("long")).toIndexedSeq: _*)
+    val width = longs.columns.length
+    val rdd = longs.queryExecution.toRdd
+    val runs = new Array[Array[Long]](rdd.getNumPartitions)
+    var total = 0L
+    longs.sparkSession.sparkContext.runJob(rdd,
+      (it: Iterator[InternalRow]) => {
+        val out = Array.newBuilder[Long]
+        var n = 0L
+        while (n <= cap && it.hasNext) {
+          val r = it.next()
+          var c = 0
+          while (c < width) { out += r.getLong(c); c += 1 }
+          n += 1
+        }
+        out.result()
+      },
+      (i: Int, run: Array[Long]) => {
+        total += run.length / width
+        if (total <= cap) runs(i) = run
+        else runs.indices.foreach(runs(_) = null)
+      })
+    if (total <= cap) Some(runs.toSeq) else None
+  }
+
+  /** Apply (isDelete, k, v) change runs to `m`: a delete removes the key,
+    * anything else sets it. The runs are per state partition and a key
+    * lives in one partition, so each key's writes apply in batch order.
+    */
+  private def applyChanges(
+      m: Map[Long, Long], runs: Seq[Array[Long]]): Map[Long, Long] =
+    runs.foldLeft(m) { (acc, a) =>
+      var out = acc
+      var i = 0
+      while (i < a.length) {
+        out = if (a(i) == 1L) out - a(i + 1) else out.updated(a(i + 1), a(i + 2))
+        i += 3
+      }
+      out
+    }
 }
 
 /** Minimal blocking client for the [[QueryServer]] line protocol — the

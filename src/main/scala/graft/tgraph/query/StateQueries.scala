@@ -124,6 +124,25 @@ object StateQueries {
       checkpointLocation: String): DataFrame =
     spark.read.format("statestore").load(checkpointLocation)
 
+  /** The change feed of that live state: one row per state write of
+    * the committed batches `fromBatch..toBatch` — `batch_id`,
+    * `change_type` (`update` | `delete`), `key`, `value` (null on a
+    * delete), `partition_id` — with each state partition's rows in
+    * commit order. Needs per-batch change files in the checkpoint:
+    * RocksDB with changelog checkpointing (the `StreamSessions`
+    * default) or the HDFS provider's delta files.
+    */
+  def streamingStateChanges(
+      spark: org.apache.spark.sql.SparkSession,
+      checkpointLocation: String,
+      fromBatch: Long,
+      toBatch: Long): DataFrame =
+    spark.read.format("statestore")
+      .option("readChangeFeed", true)
+      .option("changeStartBatchId", fromBatch)
+      .option("changeEndBatchId", toBatch)
+      .load(checkpointLocation)
+
   /** PL4 dependency tracking
     * (`state/PL4DependencyTrackingStrategy.java`): for each transaction,
     * how many earlier writes touched the keys it writes. Computed with a

@@ -2,11 +2,15 @@ package graft.tgraph
 
 import graft.SparkSpec
 import graft.evaluation.Bank
-import graft.streaming.StreamingBank
+import graft.streaming.{StreamSessions, StreamingBank}
+import graft.streaming.StreamingBank.ProbeTx
 import graft.tgraph.query.{QueryClient, QueryServer}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+
+import scala.concurrent.duration._
 
 /** The reference's out-of-process queryable state
   * (`runtime/QueryServer.java` + `query/QuerySupplier.java` clients):
@@ -624,5 +628,248 @@ class QueryServerSpec extends SparkSpec {
         assert(qps > 300, f"qps=$qps%.0f")
       } finally server.close()
     } finally q.stop()
+  }
+
+  // ---- change-feed refresh ------------------------------------------
+
+  /** A live `StreamingBank.balances` stream on `ss` whose idle accounts
+    * are evicted after `ttl` (so batches delete state), with a fresh
+    * checkpoint; `batch(txs)` commits one micro-batch.
+    */
+  private final class BankStream(ss: SparkSession, ttl: FiniteDuration) {
+    implicit private val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
+    import ss.implicits._
+    val ckpt: String =
+      java.nio.file.Files.createTempDirectory("graft-qsrv-feed").toString
+    private val input = MemoryStream[ProbeTx]
+    val query: StreamingQuery = StreamingBank.balances(ss, input.toDF(), ttl = Some(ttl))
+      .writeStream.format("noop")
+      .option("checkpointLocation", ckpt)
+      .outputMode("append")
+      .start()
+    def batch(txs: Seq[ProbeTx]): Unit = {
+      input.addData(txs); query.processAllAvailable()
+    }
+    def close(): Unit = {
+      query.stop()
+      graft.sources.FileIO.deleteScratch(new java.io.File(ckpt))
+    }
+  }
+
+  /** The full state read pinned at committed batch `b`. */
+  private def stateAt(ckpt: String, b: Long): Map[Long, Long] = {
+    import spark.implicits._
+    spark.read.format("statestore").option("batchId", b).load(ckpt)
+      .select(col("key.value").cast("long"), col("value.groupState._1").cast("long"))
+      .as[(Long, Long)].collect().toMap
+  }
+
+  /** The whole served snapshot, read through the protocol. */
+  private def served(c: QueryClient): (Long, Map[Long, Long]) =
+    parseRows(c.request(s"PRED GE ${Long.MinValue}"))
+
+  /** Transfers `from..from+n` over the sliding account window at `base`. */
+  private def churn(from: Long, n: Int, base: Long): Seq[ProbeTx] =
+    (from until from + n).map(i => StreamingBank.churnTx(i, base, 30))
+
+  test("change-feed refresh equals the full pinned read at every served batch " +
+    "(deletes, multi-batch deltas, AT walks across refreshes)") {
+    // RocksDB with changelog checkpointing: the incremental path
+    val s = new BankStream(
+      StreamSessions.scoped(spark, 4, noDataBatches = false), ttl = 300.millis)
+    try {
+      var tid = 0L
+      def step(): Unit = {
+        // past the ttl, so this batch times out (deletes) the accounts
+        // the previous one left behind the sliding window
+        Thread.sleep(350)
+        s.batch(churn(tid, 40, base = tid / 40 * 15)); tid += 40
+      }
+      step()
+      // refreshes only when the spec says so: the refresher sleeps
+      val server = new QueryServer(spark, s.ckpt, refreshMillis = 3600000L)
+      val client = new QueryClient("localhost", server.boundPort)
+      try {
+        val seen = scala.collection.mutable.ArrayBuffer[Map[Long, Long]]()
+        def check(): Long = {
+          val (b, rows) = served(client)
+          assert(b == server.servedBatchId)
+          assert(rows == stateAt(s.ckpt, b), s"served snapshot != full read at $b")
+          seen += rows
+          b
+        }
+        check()
+        // one batch, then three batches per refresh
+        Seq(1, 3, 1, 3).foreach { n =>
+          (1 to n).foreach(_ => step())
+          server.refreshNow()
+          check()
+        }
+        val deleted = seen.zip(seen.tail).exists { case (a, b) => (a.keySet -- b.keySet).nonEmpty }
+        assert(deleted, "fixture must delete state between served batches")
+        assert(server.fullRefreshes.get() == 1L, "only the first load reads the whole state")
+        assert(server.incrementalRefreshes.get() == 4L)
+
+        // an AT walk started on the incrementally cached snapshot and
+        // continued after further refreshes reproduces its batch exactly
+        val first = client.request(s"PRED GE ${Long.MinValue} LIMIT 5")
+        val (b0, page0) = parseRows(first)
+        assert(first.contains(""""truncated":true"""))
+        step(); step()
+        server.refreshNow()
+        assert(server.servedBatchId > b0)
+        var all = page0
+        var cursor = page0.keys.max
+        var more = true
+        while (more) {
+          val resp = client.request(
+            s"PRED GE ${Long.MinValue} LIMIT 5 AFTER $cursor AT $b0")
+          val (b, rows) = parseRows(resp)
+          assert(b == b0)
+          all ++= rows
+          more = resp.contains(""""truncated":true""")
+          if (more) cursor = rows.keys.max
+        }
+        assert(all == stateAt(s.ckpt, b0))
+        check()
+        assert(server.incrementalRefreshes.get() == 5L)
+      } finally { client.close(); server.close() }
+    } finally s.close()
+  }
+
+  test("refresh fallbacks stay exact: HDFS provider, no changelog, salted layout, " +
+    "degraded mode entered and left") {
+    def exactAcrossBatches(ss: SparkSession): QueryServer = {
+      val s = new BankStream(ss, ttl = 300.millis)
+      try {
+        s.batch(churn(0, 40, 0))
+        val server = new QueryServer(spark, s.ckpt, refreshMillis = 3600000L)
+        val client = new QueryClient("localhost", server.boundPort)
+        try {
+          (1 to 3).foreach { i =>
+            Thread.sleep(350)
+            s.batch(churn(i * 40L, 40, i * 15L))
+            server.refreshNow()
+            val (b, rows) = served(client)
+            assert(rows == stateAt(s.ckpt, b))
+          }
+        } finally { client.close(); server.close() }
+        server
+      } finally s.close()
+    }
+    // the HDFS provider's per-batch delta files serve the change feed
+    val hdfs = exactAcrossBatches(
+      StreamSessions.scoped(spark, 4, Some("hdfs"), noDataBatches = false))
+    assert(hdfs.incrementalRefreshes.get() == 3L)
+    // RocksDB without changelog checkpointing has no change feed: every
+    // refresh is one whole-state pass
+    val plain = spark.newSession()
+    plain.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val noLog = exactAcrossBatches(plain)
+    assert(noLog.incrementalRefreshes.get() == 0L)
+    assert(noLog.fullRefreshes.get() == 4L)
+
+    // salted layout on a changelog checkpoint: the merge needs the
+    // whole state, so it never takes the change feed
+    locally {
+      import graft.streaming.StreamingBank.{CentsBalance, StreamMovement}
+      import graft.tgraph.state.StateOperator
+      val ss = StreamSessions.scoped(spark, 4)
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
+      import ss.implicits._
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-qsrv-fsalt").toString
+      val moves = (0L until 600L).map(i => StreamMovement(i % 20, i, i % 7 - 3))
+      val input = MemoryStream[StreamMovement]
+      val q = StateOperator.runStreamingSalted[StreamMovement, Long, Long](
+        input.toDS(), _.acct, _.tid, new CentsBalance, salts = 4, hotKeys = Set(3L))
+        .toDF().writeStream.format("noop")
+        .option("checkpointLocation", ckpt).outputMode(OutputMode.Append()).start()
+      try {
+        input.addData(moves.take(300)); q.processAllAvailable()
+        val server = new QueryServer(spark, ckpt, keyCol = col("key._1").cast("long"),
+          mergeAgg = Some(sum(col("v"))), refreshMillis = 3600000L)
+        val client = new QueryClient("localhost", server.boundPort)
+        try {
+          input.addData(moves.drop(300)); q.processAllAvailable()
+          server.refreshNow()
+          val want = moves.groupBy(_.acct).view.mapValues(_.map(_.delta).sum).toMap
+          assert(served(client)._2 == want)
+          assert(server.incrementalRefreshes.get() == 0L)
+          assert(server.fullRefreshes.get() == 2L)
+        } finally { client.close(); server.close() }
+      } finally {
+        q.stop()
+        graft.sources.FileIO.deleteScratch(new java.io.File(ckpt))
+      }
+    }
+
+    // degraded mode entered and left: 2 accounts (cached) -> 4 through
+    // a 2-row delta, itself under the cap (degraded) -> 12 -> the 10 new
+    // ones evicted (cached again), exact at every batch, with a
+    // changelog checkpoint underneath
+    val s = new BankStream(
+      StreamSessions.scoped(spark, 4, noDataBatches = false), ttl = 1.second)
+    try {
+      def pair(tid: Long, a: Long, b: Long) = ProbeTx(tid, a, b, 1.0)
+      s.batch(Seq(pair(0, 101, 102)))
+      val server = new QueryServer(spark, s.ckpt, refreshMillis = 3600000L,
+        maxStateRows = 3L)
+      val client = new QueryClient("localhost", server.boundPort)
+      try {
+        def degraded(): Boolean = {
+          val before = server.degradedCacheMisses
+          client.point(Seq(-1L - server.servedBatchId)) // a fresh absent key
+          server.degradedCacheMisses > before
+        }
+        def exact(): Unit = {
+          val (b, rows) = served(client)
+          assert(rows == stateAt(s.ckpt, b))
+        }
+        exact(); assert(!degraded())
+        s.batch(Seq(pair(1, 110, 111)))
+        server.refreshNow()
+        exact(); assert(degraded(), "a 4-row state stayed cached under maxStateRows = 3")
+        s.batch((1 until 5).map(i => pair(1 + i, 110 + 2 * i, 111 + 2 * i)))
+        server.refreshNow()
+        exact(); assert(degraded())
+        Thread.sleep(1500) // past the ttl: accounts 110..119 time out
+        s.batch(Seq(pair(6, 101, 102)))
+        server.refreshNow()
+        exact(); assert(!degraded())
+        assert(served(client)._2.keySet == Set(101L, 102L))
+      } finally { client.close(); server.close() }
+    } finally s.close()
+  }
+
+  test("close() during a refresh cancels the server's jobs; the checkpoint " +
+    "can be deleted at once") {
+    val s = new BankStream(
+      StreamSessions.scoped(spark, 4, noDataBatches = false), ttl = 1.hour)
+    val errBuf = new java.io.ByteArrayOutputStream()
+    val prevErr = System.err
+    val feeding = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val feeder = new Thread(() => {
+      var tid = 0L
+      while (feeding.get()) { s.batch(churn(tid, 50, 0)); tid += 50 }
+    })
+    try {
+      s.batch(churn(0, 50, 0))
+      feeder.start()
+      System.setErr(new java.io.PrintStream(
+        new org.apache.commons.io.output.TeeOutputStream(prevErr, errBuf), true))
+      val server = new QueryServer(spark, s.ckpt, refreshMillis = 1)
+      // wait until a refresh job is in flight, then close under it
+      eventually() { if (server.jobsActive) Some(()) else None }
+      server.close()
+      assert(!server.jobsActive, "a refresh job outlived close()")
+      feeding.set(false); feeder.join()
+      s.close() // deletes the checkpoint
+      Thread.sleep(500)
+      assert(!errBuf.toString.contains("[query-server]"), errBuf.toString)
+    } finally {
+      System.setErr(prevErr)
+      feeding.set(false); feeder.join()
+      s.close()
+    }
   }
 }
