@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   * enclosing projection method grows linearly in the cell count and
   * crosses Janino's 64 KB method limit near ~400 cells, collapsing
   * whole-stage codegen to interpreted eval: measured 61.6 s for the
-  * √n-sized IVF assignment at 200k vectors in `LlmScaleProbe`), or as
+  * √n-sized IVF assignment at 200k vectors), or as
   * a broadcast join exploding n·|cells| candidate rows through a
   * grouped argmax (`pqEncodeWith`'s old shape — measured 111 s for the
   * sample-trained PQ encode at 200k). Both are the wrong slope for a

@@ -15,8 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * The declarative forms ([[graft.operators.Dedup.minHashFromHashes]]
   * etc.) are higher-order-function folds — correct and portable, but
   * interpreted per lambda step: measured ~2.4k docs/s for a 16-hash
-  * minhash at 1M docs (`graft.tools.LlmScaleProbe`), which at 100 TB
-  * would make signature generation the pipeline bottleneck. These
+  * minhash at 1M docs, which at 100 TB would make signature
+  * generation the pipeline bottleneck. These
   * expressions compute the identical values (spec-asserted against the
   * declarative forms; the DuckDB oracles are unchanged) in tight
   * primitive loops via `doGenCode`.

@@ -1,6 +1,5 @@
 package graft.metrics
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
 /** Metrics — the reference's `metrics/` package (`Throughput.java`,
@@ -16,21 +15,11 @@ object Metrics {
     def perSecond: Double = if (seconds > 0) records / seconds else 0.0
   }
 
-  final case class TimeDelta(label: String, nanos: Long) {
-    def millis: Double = nanos / 1e6
-  }
-
   /** Time a thunk returning a record count → Throughput. */
   def measure(thunk: => Long): Throughput = {
     val t0 = System.nanoTime()
     val n = thunk
     Throughput(n, (System.nanoTime() - t0) / 1e9)
-  }
-
-  def timed[A](label: String)(thunk: => A): (A, TimeDelta) = {
-    val t0 = System.nanoTime()
-    val a = thunk
-    (a, TimeDelta(label, System.nanoTime() - t0))
   }
 
   /** Streaming report from the engine's own progress events —
@@ -101,8 +90,8 @@ object Metrics {
     * batch's completion time), so the distribution reflects true
     * open→close record latency — including in-batch queueing — not just
     * per-batch duration. Records that never reach the sink (aborted /
-    * filtered transactions) stay open and are reported as `openCount`,
-    * mirroring the reference tracker's unmatched starts.
+    * filtered transactions) stay open and are never sampled, like the
+    * reference tracker's unmatched starts.
     */
   final class RecordLatencyCollector {
     private val openNs =
@@ -120,9 +109,6 @@ object Metrics {
         val o = openNs.remove(t)
         if (o != null) samples.add(java.lang.Long.valueOf(closeNs - o.longValue()))
       }
-
-    /** Records stamped at open that never closed (aborted/filtered). */
-    def openCount: Int = openNs.size
 
     def summary: RecordLatencySummary = {
       import scala.jdk.CollectionConverters._

@@ -185,21 +185,16 @@ object IncrementalCdc {
       defaultPerMille: Int = 800,
       txDir: Option[String] = None): DataFrame = {
     import spark.implicits._
-    def t[A](label: String)(f: => A): A =
-      if (sys.env.contains("GRAFT_CDC_TIMING")) {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[cdc-t] $label ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-      } else f
     val evCols = Seq("doc_id", "text", "lang", "source", "n_chars", "is_delete")
-    val evs = t("evs") { events
+    val evs = events
       .groupBy(col("doc_id"))
       .agg(max_by(
         struct((evCols :+ "ev_seq").map(col): _*), col("ev_seq")).as("r"))
       .select(evCols.map(c => col(s"r.$c")): _*)
-      .localCheckpoint(true) } // batch-sized
-    val batchShards = t("batchShards") { evs
+      .localCheckpoint(true) // batch-sized
+    val batchShards = evs
       .select(pmod(col("doc_id"), lit(nShards.toLong)).as("shard"))
-      .distinct().collect().map(_.getLong(0)).toSeq }
+      .distinct().collect().map(_.getLong(0)).toSeq
 
     // ---- classification + pre-state keepers: journaled per batch ----
     // the ONLY pre-state-dependent values; everything downstream is a
@@ -223,19 +218,19 @@ object IncrementalCdc {
     // invariant: a crash mid-seal leaves both stores untouched.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    val corpusSealF = Future { t("corpus-seal") {
+    val corpusSealF = Future {
       oldBuckets
         .join(evs.select("doc_id"), Seq("doc_id"), "left_anti")
         .unionByName(evs.filter(!col("is_delete")).drop("is_delete")
           .withColumn("shard", pmod(col("doc_id"), lit(nShards.toLong))))
         .localCheckpoint(true)
-    } }
+    }
     // the journal frame (chg + pre-state keeper rows), the touched
     // fingerprint buckets, and — on the fresh path — the sealed
     // CURRENT content of those buckets (reused by the index rewrite so
     // the hot path scans the pruned index exactly once per batch);
     // None when the batch classifies empty
-    val logOpt: Option[(DataFrame, Seq[Long], Option[DataFrame])] = t("cls") {
+    val logOpt: Option[(DataFrame, Seq[Long], Option[DataFrame])] =
       if (graft.sources.StoreFs.exists(
           new org.apache.hadoop.fs.Path(logDir, "_SUCCESS"))) {
         // replay: the stores may already be (partially) post-state —
@@ -295,20 +290,19 @@ object IncrementalCdc {
           Some((log, buckets, Some(idxPre)))
         }
       }
-    }
 
     // ---- 1. CORPUS store: commit the pre-sealed rewrite (old rows
     //      minus batch ids, plus live upserts); idempotent on replay.
     //      The journal is durable by this point; the commit runs
     //      concurrently with the index chain below (different store;
     //      both consume only sealed/journaled frames) ----
-    val corpusF = Future { t("corpus-rw") {
+    val corpusF = Future {
       val sealedCorpus = Await.result(
         corpusSealF, scala.concurrent.duration.Duration.Inf)
       val v = graft.sources.ManifestStore.commit(
         sealedCorpus, "shard", batchShards, corpusDir)
       (sealedCorpus, v)
-    } }
+    }
 
     // publish the batch's CROSS-STORE tx record: one atomic pin of all
     // four stores' just-committed versions, so a consumer can read the
@@ -370,11 +364,11 @@ object IncrementalCdc {
     // commit before publishing. Replay stays idempotent: a crash
     // between this commit and publishTx re-derives the same content
     // from the journal either way.
-    val sealedIdx = t("index-seal") { newIdx.localCheckpoint(true) }
-    val idxF = Future { t("index-commit") {
+    val sealedIdx = newIdx.localCheckpoint(true)
+    val idxF = Future {
       graft.sources.ManifestStore.commit(
         sealedIdx, "fpb", touchedBuckets, indexDir)
-    } }
+    }
 
     // ---- 3. KEEPS: touched groups' keepers recompute from the
     //      UPDATED index buckets (the sealed frame, no store re-read).
@@ -382,10 +376,10 @@ object IncrementalCdc {
     //      keeper set; when the set is unchanged (the common text-edit
     //      where the doc stays its group's keeper) the store is not
     //      touched at all ----
-    val keptTouched = t("keptTouched") { sealedIdx
+    val keptTouched = sealedIdx
       .join(touchedFps, Seq("fingerprint"), "left_semi")
       .groupBy(col("fingerprint")).agg(min(col("doc_id")).as("keep_id"))
-      .localCheckpoint(true) } // edit-sized
+      .localCheckpoint(true) // edit-sized
     val priorIds = priorKeep.select(col("keep_id"))
     val newIds = keptTouched.select(col("keep_id"))
     val removals = priorIds.join(newIds, Seq("keep_id"), "left_anti")
@@ -416,7 +410,7 @@ object IncrementalCdc {
       .unionByName(adds.select(col("keep_id")))
       .localCheckpoint(true) // shard-slice-sized
     val keepsF: Future[Option[Long]] = Future {
-      if (flipShards.nonEmpty) t("keeps-rw") {
+      if (flipShards.nonEmpty) {
         val newKeeps = readKeeps(spark, keepsDir, Some(flipShards))
           .join(removals, Seq("keep_id"), "left_anti")
           .join(adds, Seq("keep_id"), "left_anti") // replay: already added
@@ -440,9 +434,9 @@ object IncrementalCdc {
     // scan it while the stream keeps committing) — it commits through
     // the manifest store, so concurrent readers get atomic snapshots
     // (+ bounded time travel) instead of racing a partition swap
-    val packedV = t("packed-rw") { graft.sources.ManifestStore.commit(
+    val packedV = graft.sources.ManifestStore.commit(
       packedTouched, "grp", touchedIds, packedDir,
-      statsCols = Seq("doc_id")) }
+      statsCols = Seq("doc_id"))
     val keepsV = Await.result(keepsF, scala.concurrent.duration.Duration.Inf)
     val idxV = Await.result(idxF, scala.concurrent.duration.Duration.Inf)
     publishTx(corpusV, Some(idxV), keepsV, Some(packedV))
@@ -450,7 +444,7 @@ object IncrementalCdc {
     // maintenance sweep every JournalRetain batches: reclaim crashed-
     // attempt orphans the per-commit manifest-diff GC can't see (the
     // only pass that LISTs partition dirs — amortized off the hot path)
-    if (batchId > 0 && batchId % JournalRetain == 0) t("vacuum") {
+    if (batchId > 0 && batchId % JournalRetain == 0) {
       Seq(corpusDir -> "shard", indexDir -> "fpb",
         keepsDir -> "shard", packedDir -> "grp").foreach {
         case (d, pc) => graft.sources.ManifestStore.vacuum(d, pc)

@@ -345,7 +345,7 @@ object Similarity {
     * the FAISS practice: train on a sample, encode everything in one
     * pass — with no join and no n·m·2^subDim candidate-row explosion
     * (the previous broadcast-join spelling measured 111 s at 200k
-    * vectors in `LlmScaleProbe`; same arithmetic, spec-pinned).
+    * vectors; same arithmetic, pinned by `CellKernelsSpec`).
     */
   def pqEncodeWith(
       df: DataFrame, id: Column, vec: Column,
@@ -1057,8 +1057,8 @@ object Similarity {
     * candidate volume O(n·tables·targetBucket) — the knob to re-derive
     * at each scale-up rather than a constant to copy. The registered
     * fixture queries use exactly this rule at their own n (2k vectors,
-    * 8 tables, target ~32 → 6 bits); `graft.tools.LlmScaleProbe`
-    * re-derives it at 1M (15 bits).
+    * 8 tables, target ~32 → 6 bits); at 1M vectors it asks for 15
+    * bits before the dimension clamp.
     */
   def recommendedBits(n: Long, dim: Int, tables: Int, targetBucket: Int = 32): Int = {
     val wanted = math.max(1,
@@ -1267,8 +1267,7 @@ object Similarity {
     * Returns the dim×dim rotation in milli fixed point for
     * [[applyDenseMilli]]. Not static-SQL-expressible (iterative SVD),
     * so its gate rides the spec suite + the SQL-replayable
-    * [[opqPermutation]] rung; the recall ladder is probe-measured
-    * (`OpqRecallProbe`).
+    * [[opqPermutation]] rung; `OpqSpec` asserts the recall ladder.
     */
   def opqTrainRotationMilli(
       sampleMilli: Array[Array[Long]], m: Int, subDim: Int,

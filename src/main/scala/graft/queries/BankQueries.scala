@@ -292,10 +292,11 @@ object BankQueries {
         .orderBy("acct")
     }),
     // The salted SPU fold taken ONLINE
-    // (StateOperator.runStreamingSalted): hot accounts fold 8-wide in
-    // (acct, salt) subgroup state across 4 micro-batches, snapshots
-    // merge on read. Shares t_spu_updates' oracle verbatim — the
-    // streamed == batch commutative-contract claim, online.
+    // (StateOperator.runStreamingSaltedDynamic, static hot set): hot
+    // accounts fold 8-wide in (acct, salt) subgroup state across 4
+    // micro-batches, snapshots merge on read. Shares t_spu_updates'
+    // oracle verbatim — the streamed == batch commutative-contract
+    // claim, online.
     "t_spu_salted_stream" -> ((s, dir) => {
       import s.implicits._
       val events = Tables.load(s, dir, "events")

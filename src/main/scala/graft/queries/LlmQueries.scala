@@ -236,8 +236,9 @@ object LlmQueries {
       // 2·dot − ‖c‖², ties to the largest cell), then ONE full-corpus
       // encode pass against the trained codebook — training cost is
       // sample-sized however big the corpus; the oracle replays
-      // sample selection + both rounds + the encode. Measured
-      // (PqRecallProbe, 50 queries): ADC 0.544, rerank 0.98.
+      // sample selection + both rounds + the encode. Measured over 50
+      // queries: ADC 0.544, rerank 0.98 (SimilaritySpec "sample-trained
+      // PQ" pins >= 0.5 / >= 0.9).
       val (codebook, encoded) =
         Similarity.pqTrainSampleEncode(
           e, col("vec_id"), col("embedding"), m = 8, subDim = 8,
@@ -303,7 +304,8 @@ object LlmQueries {
     // multi-stage residual PQ (RQ): stage 2 codes what stage 1 lost —
     // 16 bytes/vector lift the compressed-domain (ADC) ranking past
     // the 8-byte plain-PQ ceiling (measured 0.544 -> 0.796 recall@5
-    // over 50 queries, PqRecallProbe; 3 stages reach 0.92). The gate
+    // over 50 queries; 3 stages reach 0.92; SimilaritySpec "two-stage
+    // residual PQ" pins both with margin). The gate
     // pins the pure ADC ranking; every stage's training (md5 sample,
     // 2 Lloyd rounds, seeds pq0/pq1) + the decode/residual bridge is
     // replayed by the oracle stage by stage.
@@ -321,7 +323,8 @@ object LlmQueries {
     // the RQ rung's PRODUCTION read path: two-stage ADC shortlists the
     // top-50 per query, exact quantized dots rerank ONLY the shortlist
     // (float vectors fetched for shortlist·|queries| rows — the
-    // recall-buyback recipe measured 0.796 -> 0.98+ in PqRecallProbe)
+    // recall-buyback recipe measured 0.796 -> 0.98+; SimilaritySpec
+    // "two-stage residual PQ" pins the rerank >= 0.95)
     "ann_rq_rerank" -> ((s, dir) => {
       val e = embs(s, dir)
       val (cbs, enc) = Similarity.pqResidualTrainSampleEncode(
@@ -385,9 +388,9 @@ object LlmQueries {
     // spec-gated since an iterative SVD is not static-SQL-
     // expressible). The oracle replays gram → sdev → permutation →
     // sample → training → encode → ADC end to end. Fixture-measured
-    // (OpqRecallProbe, planted anisotropy): ADC 0.568 plain → 0.880
-    // permuted at equal bytes; parity on the near-isotropic parquet
-    // embeddings, as theory predicts.
+    // (planted anisotropy): ADC 0.568 plain → 0.880 permuted at equal
+    // bytes; parity on the near-isotropic parquet embeddings, as
+    // theory predicts (OpqSpec "recall at equal bytes" pins both).
     "ann_opq" -> ((s, dir) => {
       val e = embs(s, dir)
       val scales = Similarity.whitenScales(
@@ -486,8 +489,8 @@ object LlmQueries {
     // one aggregate, CTE-replayed by the oracle); queries probe
     // recommendedNprobe(cells, 0.25) cells, candidates index in their
     // 3 best (multiple assignment). Measured recall@5 vs the exact
-    // scan (IvfRecallProbe): 0.90 at n=500, 0.94 at n=2000 —
-    // SimilaritySpec pins >= 0.8 at this exact config.
+    // scan: 0.90 at n=500, 0.94 at n=2000 — SimilaritySpec pins
+    // >= 0.8 and >= 0.85 at this exact config.
     "ann_ivf" -> ((s, dir) => {
       val e = embs(s, dir)
       val n = e.count()

@@ -695,14 +695,6 @@ object ManifestStore {
       maxRetries: Int = 8,
       writerLeaseTtlMillis: Long = DefaultWriterLeaseTtlMillis):
       Long = {
-    // GRAFT_STORE_TIMING=1: per-phase commit timing on stderr (guide
-    // §1 measure first — the store gates' cost is commit fixed cost)
-    def t[A](label: String)(f: => A): A =
-      if (sys.env.contains("GRAFT_STORE_TIMING")) {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(
-          f"[store-t] $label ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
-      } else f
     // an un-manifested store must fail fast: treating it as empty
     // would make the GC below delete every pre-existing data file
     require(latestVersion(storeDir).nonEmpty,
@@ -752,7 +744,7 @@ object ManifestStore {
       math.max(1L, writerLeaseTtlMillis / 3),
       java.util.concurrent.TimeUnit.MILLISECONDS)
     try {
-    val added = t("stage-write") { (try {
+    val added = try {
       // `orderWithin` CLUSTERS each partition's rows before the write
       // (one local sort, no extra shuffle) and `maxRecordsPerFile`
       // cuts the sorted stream into several files per partition — so
@@ -810,12 +802,12 @@ object ManifestStore {
     } finally {
       StoreFs.delete(staging, recursive = true)
       ()
-    }) }
+    }
     // added-file stats harvested ONCE — rebase retries are
     // metadata-only and must not re-read footers
-    val addedStats = t("stats-harvest") {
+    val addedStats =
       if (statsCols.isEmpty) Map.empty[String, Map[String, (Long, Long)]]
-      else harvestStats(storeDir, added, statsCols) }
+      else harvestStats(storeDir, added, statsCols)
     var attempt = 0
     while (true) {
       val prev = latestVersion(storeDir).get
@@ -894,10 +886,10 @@ object ManifestStore {
         prevM.ts.map(t => Seq(prev -> t)).getOrElse(Nil)) :+ (v -> ts))
         .takeRight(TsIdxKeep)
       try {
-        t("manifest-cas") { writeManifest(storeDir, v, (carry ++ added).sorted, ts, newTags, op,
-          tsIdx = newTsIdx) }
+        writeManifest(storeDir, v, (carry ++ added).sorted, ts, newTags, op,
+          tsIdx = newTsIdx)
         // CAS won — only this version's winner writes its sidecars
-        if (statsCols.nonEmpty) t("stats-sidecar") {
+        if (statsCols.nonEmpty) {
           // carried files keep their previous bounds (the files are
           // immutable); only the just-added files paid a footer read
           val carried = stats(storeDir, prev)
@@ -905,7 +897,7 @@ object ManifestStore {
             carry.flatMap(f => carried.get(f).map(f -> _)).toMap ++
               addedStats)
         }
-        t("gc") { gc(storeDir, partCol, v, retainVersions, retainAgeMillis) }
+        gc(storeDir, partCol, v, retainVersions, retainAgeMillis)
         return v
       } catch {
         case e: ConcurrentCommitException =>

@@ -236,49 +236,6 @@ object StreamingBank {
       if (elapsedSec > 0) served.get() / elapsedSec else 0.0)
   }
 
-  /** Deterministic driver-side transfer (rate-probe scale — avoids a
-    * Spark collect per trial; same shape as TransferSource's mapping).
-    */
-  def syntheticTx(i: Long, keySpace: Int = 100000): ProbeTx = {
-    val h1 = scala.util.hashing.MurmurHash3.productHash((i, 1)).abs % keySpace
-    val h2raw = scala.util.hashing.MurmurHash3.productHash((i, 2)).abs % keySpace
-    val h2 = if (h2raw == h1) (h2raw + 1) % keySpace else h2raw
-    val amount = (scala.util.hashing.MurmurHash3.productHash((i, 3)).abs % 10000) / 100.0 * 2.0
-    ProbeTx(i, h1.toLong, h2.toLong, amount)
-  }
-
-  /** Run `batches` micro-batches of `rowsPerBatch` synthetic transfers
-    * through the streaming transactional pipeline and report per-batch
-    * latency — the trial primitive for [[graft.tools.RateProbe]].
-    */
-  def microBatchProbe(
-      spark: SparkSession,
-      batches: Int,
-      rowsPerBatch: Int): graft.metrics.Metrics.LatencySummary = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val collector = new graft.metrics.Metrics.LatencyCollector
-    spark.streams.addListener(collector)
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[ProbeTx]
-    val q = balances(spark, input.toDF()).writeStream
-      .format("noop")
-      .outputMode("append")
-      .start()
-    try {
-      var b = 0L
-      while (b < batches) {
-        input.addData(
-          (b * rowsPerBatch until (b + 1) * rowsPerBatch).map(i => syntheticTx(i)))
-        q.processAllAvailable()
-        b += 1
-      }
-    } finally {
-      q.stop()
-      spark.streams.removeListener(collector)
-    }
-    collector.summary
-  }
-
   /** Balance fold over exact cents (non-negative invariant handled
     * upstream by the stateless vote — this fold applies committed
     * movements).
@@ -320,8 +277,8 @@ object StreamingBank {
     * `evaluation/BankUseCaseNoT.java`: the identical topology (fork
     * into movements, keyed fold) with votes/2PC/state versioning
     * stripped out. The throughput delta against [[balances]] IS the
-    * measured cost of transactions (reported by
-    * [[graft.tools.ScaleProbe]] and BASELINE.md).
+    * measured cost of transactions (perfbench's bank_batch phase times
+    * both: `graph_tps` against `tgraph.no_tx`).
     */
   def balancesNoT(spark: SparkSession, transfers: DataFrame): DataFrame = {
     val cents = Transfers.cents(col("amount"))
@@ -452,7 +409,8 @@ object StreamingBank {
   }
 
   /** The SALTED single-partition-update fold taken online (the gate
-    * spelling of [[graft.tgraph.state.StateOperator.runStreamingSalted]]):
+    * spelling of [[graft.tgraph.state.StateOperator.runStreamingSaltedDynamic]]
+    * with a static hot set):
     * movements range-partition by tid into micro-batch files, hot
     * accounts fold `salts`-wide in (acct, salt) subgroup state, each
     * batch appends one snapshot row per touched subgroup to the sink,
@@ -481,8 +439,9 @@ object StreamingBank {
     val stream = graft.sources.FileIO.streamParquet(
       ss, inDir.toString, moves.schema, maxFilesPerTrigger = 1)
       .as[StreamMovement]
-    val snaps = StateOperator.runStreamingSalted[StreamMovement, Long, Long](
-      stream, _.acct, _.tid, new CentsBalance, salts, hotKeys)
+    val snaps = StateOperator.runStreamingSaltedDynamic[StreamMovement, Long, Long](
+      stream, _.acct, _.tid, new CentsBalance, salts,
+      new StateOperator.HotSet(hotKeys))
     val q = graft.sources.FileIO.streamingParquetSink(
       snaps.toDF(), outDir.toString, ckpt.toString).start()
     q.awaitTermination()

@@ -41,14 +41,3 @@ object IsolationLevel {
   case object PL4 extends IsolationLevel(4)
   val values: Seq[IsolationLevel] = Seq(PL0, PL1, PL2, PL3, PL4)
 }
-
-/** Concurrency-control strategy, mirroring `tgraph/twopc/Strategy` usage
-  * (`OptimisticTransactionExecutor` / `PessimisticTransactionExecutor`).
-  * In graft's deterministic replay both produce the same serial order;
-  * the flag selects the typed executor's conflict-handling path.
-  */
-sealed trait Strategy
-object Strategy {
-  case object Optimistic extends Strategy
-  case object Pessimistic extends Strategy
-}

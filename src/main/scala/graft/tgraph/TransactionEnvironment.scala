@@ -4,8 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The transactional-graph context — analog of the reference's
-  * `tgraph/TransactionEnvironment.java` (isolation level, strategy,
-  * dependency tracking, open/close lifecycle).
+  * `tgraph/TransactionEnvironment.java` (isolation level, open/close
+  * lifecycle).
+  *
+  * The reference's concurrency-control strategy and dependency-tracking
+  * switches have no flag here. Both strategies commit the same serial
+  * history in graft's deterministic replay; their runtime difference
+  * (optimistic replays vs pessimistic lock waits) is
+  * [[graft.tgraph.state.StateOperator.strategyRuntime]]
+  * (`t_strategy_runtime`), and PL4 dependency tracking is
+  * [[graft.tgraph.query.StateQueries.dependencies]].
   *
   * `open` enriches a stream with transaction ids (the reference's
   * `twopc/OpenOperator`); `close` reduces votes across all state
@@ -16,9 +24,7 @@ import org.apache.spark.sql.functions._
   * table is small — AQE decides).
   */
 final case class TransactionEnvironment(
-    isolation: IsolationLevel = IsolationLevel.PL3,
-    strategy: Strategy = Strategy.Optimistic,
-    dependencyTracking: Boolean = true) {
+    isolation: IsolationLevel = IsolationLevel.PL3) {
 
   import TStream._
 

@@ -117,7 +117,7 @@ final class QueryServer(
     // value — pass custom extractors for other operators' layouts
     keyCol: Column = col("key.value").cast("long"),
     valueCol: Column = col("value.groupState._1").cast("long"),
-    // Salted pipelines (runStreamingSalted*): the state key is
+    // Salted pipelines (runStreamingSaltedDynamic): the state key is
     // (key, salt) and one logical key owns ≤ `salts` subgroup rows.
     // Passing e.g. `Some(sum(col("v")))` with
     // `keyCol = col("key._1")` (tuple keys surface unwrapped; the

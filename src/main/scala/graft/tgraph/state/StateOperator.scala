@@ -1,6 +1,6 @@
 package graft.tgraph.state
 
-import graft.tgraph.{IsolationLevel, Strategy, Vote}
+import graft.tgraph.{IsolationLevel, Vote}
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -65,7 +65,7 @@ final case class StateChange[K, V](
   *    order, which converges to the same serial schedule — modeled by
   *    sorting. The strategies differ online (aborts vs waits), not in
   *    the committed history, which is what a deterministic engine
-  *    materializes.
+  *    materializes; [[strategyRuntime]] models the online difference.
   *
   * Scale: one shuffle (groupByKey on the state key); each group is
   * folded on its executor with no driver involvement. Hot keys are the
@@ -185,7 +185,6 @@ object StateOperator {
       key: T => K,
       tid: T => Long,
       sf: StateFunction[T, V],
-      strategy: Strategy = Strategy.Pessimistic,
       isolation: IsolationLevel = IsolationLevel.PL3,
       maxReplays: Int = 2)(implicit
       kEnc: Encoder[K],
@@ -273,43 +272,6 @@ object StateOperator {
       }
   }
 
-  /** ONLINE salted final-state fold — [[runBatchSaltedFinal]]'s
-    * commutative fast path for [[runStreaming]], which otherwise
-    * serializes a hot key inside every micro-batch (one
-    * flatMapGroupsWithState group per key): updates of keys in the
-    * static `hotKeys` set shard into `salts` (key, salt) subgroups,
-    * each with its OWN keyed state folding its share of the stream, so
-    * a hot key's per-batch work runs `salts`-wide across executors;
-    * the long tail keeps one subgroup each (the measured 2×
-    * salt-everything trap from the batch operator applies unchanged).
-    * The hot set is static per query — the caller detects it from
-    * workload stats (a counting aggregate, the
-    * [[runBatchSaltedFinal]] phase-1 shape) or domain knowledge;
-    * membership is broadcast, never per-row driver work.
-    *
-    * Soundness contract: identical to [[runBatchSaltedFinal]] —
-    * commuting, never-aborting transitions with `sf.defaultValue` the
-    * merge identity. Each micro-batch emits ONE snapshot row per
-    * touched subgroup: (key, salt, ver, partial value, committed so
-    * far) — O(touched subgroups), never the update stream — and
-    * [[mergeSaltedSnapshots]] folds the drained rows' LAST snapshot
-    * per subgroup with the caller's `combine` monoid into the same
-    * (key, final value, n committed) frame as the batch operator.
-    */
-  def runStreamingSalted[T, K, V](
-      ds: Dataset[T],
-      key: T => K,
-      tid: T => Long,
-      sf: StateFunction[T, V],
-      salts: Int,
-      hotKeys: Set[K],
-      maxReplays: Int = 2)(implicit
-      ksEnc: Encoder[(K, Int)],
-      stateEnc: Encoder[(V, Long, Long)],
-      outEnc: Encoder[(K, Int, Long, V, Long)]): Dataset[(K, Int, Long, V, Long)] =
-    runStreamingSaltedDynamic(
-      ds, key, tid, sf, salts, new HotSet(hotKeys), maxReplays)
-
   /** Mutable, per-micro-batch-refreshed hot-key membership for
     * [[runStreamingSaltedDynamic]]. Spark serializes the salt-
     * assignment closure into each stage's task binary (itself a
@@ -327,25 +289,46 @@ object StateOperator {
       synchronized { current = current ++ ks }
   }
 
-  /** [[runStreamingSalted]] with a PROMOTABLE hot set — the
-    * reference's single-partition-update axis without the static-set
-    * assumption: a key that becomes hot mid-stream starts scattering
-    * across `salts` (key, salt) subgroups from the batch after its
-    * promotion. No subgroup state migrates on promotion: subgroup
-    * (k, 0) — the cold key's only subgroup — simply becomes one of
-    * the `salts` scatter targets and keeps its accumulated partial,
-    * which the commutative-monoid merge ([[mergeSaltedSnapshots]])
-    * absorbs like any other partial. Promotion timing therefore
-    * affects only PERFORMANCE (when the per-batch ceiling lifts),
-    * never the merged result.
+  /** ONLINE salted final-state fold — [[runBatchSaltedFinal]]'s
+    * commutative fast path for [[runStreaming]], which otherwise
+    * serializes a hot key inside every micro-batch (one
+    * flatMapGroupsWithState group per key): updates of keys in the
+    * hot set shard into `salts` (key, salt) subgroups, each with its
+    * OWN keyed state folding its share of the stream, so a hot key's
+    * per-batch work runs `salts`-wide across executors; the long tail
+    * keeps one subgroup each (the measured 2× salt-everything trap
+    * from the batch operator applies unchanged). Membership is
+    * broadcast, never per-row driver work.
+    *
+    * A STATIC hot set is `new HotSet(keys)`, never promoted: the
+    * caller detects it from workload stats (a counting aggregate, the
+    * [[runBatchSaltedFinal]] phase-1 shape) or domain knowledge. A
+    * PROMOTABLE hot set is the reference's single-partition-update
+    * axis without the static-set assumption: a key that becomes hot
+    * mid-stream starts scattering across `salts` (key, salt)
+    * subgroups from the batch after its promotion. No subgroup state
+    * migrates on promotion: subgroup (k, 0) — the cold key's only
+    * subgroup — simply becomes one of the `salts` scatter targets and
+    * keeps its accumulated partial, which the commutative-monoid merge
+    * ([[mergeSaltedSnapshots]]) absorbs like any other partial.
+    * Promotion timing therefore affects only PERFORMANCE (when the
+    * per-batch ceiling lifts), never the merged result.
     *
     * Detection is the caller's per-batch loop (see
     * `StreamingBank.saltedBalancesDynamicFromFiles`): a COLD key's
     * entire history lives in subgroup (k, 0), so its snapshot row
     * carries the key's full cumulative committed count — an exact,
     * driver-cheap crossing test (≤ batchRows / hotThreshold keys ever
-    * cross per batch). Soundness contract unchanged from
-    * [[runBatchSaltedFinal]]: commuting, never-aborting transitions.
+    * cross per batch).
+    *
+    * Soundness contract: identical to [[runBatchSaltedFinal]] —
+    * commuting, never-aborting transitions with `sf.defaultValue` the
+    * merge identity. Each micro-batch emits ONE snapshot row per
+    * touched subgroup: (key, salt, ver, partial value, committed so
+    * far) — O(touched subgroups), never the update stream — and
+    * [[mergeSaltedSnapshots]] folds the drained rows' LAST snapshot
+    * per subgroup with the caller's `combine` monoid into the same
+    * (key, final value, n committed) frame as the batch operator.
     */
   def runStreamingSaltedDynamic[T, K, V](
       ds: Dataset[T],
@@ -380,7 +363,7 @@ object StateOperator {
         val aborted = changes.count(!_.committed)
         if (aborted > 0) throw new IllegalStateException(
           s"salted-fold contract violation on key ${ks._1}: $aborted " +
-            "uncommitted transition(s); runStreamingSalted* requires " +
+            "uncommitted transition(s); runStreamingSaltedDynamic requires " +
             "commuting, never-aborting state functions")
         val committed = pCommitted + changes.count(_.committed)
         val ver = pVer + 1
@@ -416,7 +399,7 @@ object StateOperator {
       .as[(K, Int, Long, V, Long)]
   }
 
-  /** Phase-2 merge for [[runStreamingSalted]]'s drained snapshot rows:
+  /** Phase-2 merge for [[runStreamingSaltedDynamic]]'s drained snapshot rows:
     * [[lastSaltedSnapshots]] collapses the snapshot history to one row
     * per subgroup (a map-side-combining aggregate — the unbounded
     * dimension never reaches a single task), then each key's ≤`salts`
@@ -531,7 +514,6 @@ object StateOperator {
       key: T => K,
       tid: T => Long,
       sf: StateFunction[T, V],
-      strategy: Strategy = Strategy.Pessimistic,
       isolation: IsolationLevel = IsolationLevel.PL3,
       maxReplays: Int = 2,
       ttl: Option[scala.concurrent.duration.FiniteDuration] = None)(implicit

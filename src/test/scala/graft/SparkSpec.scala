@@ -8,6 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val Sf0001 = "/root/testdata/sf0.001"
+  /** The 100× scale: its embeddings table holds 2000 vectors (500 at sf0.001). */
+  val Sf01 = "/root/testdata/sf0.1"
 }
 
 object SparkSpec {

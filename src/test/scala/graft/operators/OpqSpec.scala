@@ -42,17 +42,20 @@ class OpqSpec extends SparkSpec {
       .select("qid", "cid").as[(Long, Long)].collect().toSet
   }
 
-  private lazy val brute: Set[(Long, Long)] = {
-    val q = fixture.filter(col("vec_id") < 50)
+  private def bruteTop5(frame: DataFrame): Set[(Long, Long)] = {
+    val q = frame.filter(col("vec_id") < 50)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val c = fixture
+    val c = frame
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
     Similarity.bruteForceTopK(q, c, 5)
       .select("qid", "cid").as[(Long, Long)].collect().toSet
   }
 
-  private def recall(top: Set[(Long, Long)]): Double =
-    (brute & top).size.toDouble / brute.size
+  private lazy val brute: Set[(Long, Long)] = bruteTop5(fixture)
+
+  private def recall(
+      top: Set[(Long, Long)], truth: Set[(Long, Long)] = brute): Double =
+    (truth & top).size.toDouble / truth.size
 
   test("applyPermutation is exactly orthogonal: dots are preserved " +
     "bit-for-bit when both sides rotate") {
@@ -101,6 +104,18 @@ class OpqSpec extends SparkSpec {
     info(f"fixture ADC recall@5: plain=$plain%.3f perm-OPQ=$opq%.3f")
     assert(opq >= plain + 0.2,
       s"perm-OPQ must beat plain PQ at equal bytes: $opq vs $plain")
+    // the near-isotropic parquet embeddings: no rotation has variance
+    // to rebalance there, so the permutation holds parity with plain PQ
+    val e = graft.tables.Tables.load(spark, Sf0001, "embeddings")
+    val eBrute = bruteTop5(e)
+    val ePlain = recall(adcTop5(e), eBrute)
+    val ePerm = recall(adcTop5(asVecs(Similarity.applyPermutation(
+      e, col("vec_id"), col("embedding"), Similarity.opqPermutation(
+        Similarity.whitenScales(Similarity.embGram(e, col("embedding"))), 8, 8)))),
+      eBrute)
+    info(f"parquet ADC recall@5: plain=$ePlain%.3f perm-OPQ=$ePerm%.3f")
+    assert(math.abs(ePerm - ePlain) <= 0.1,
+      s"perm-OPQ must hold parity on isotropic embeddings: $ePerm vs $ePlain")
   }
 
   test("dense alternating-Procrustes fit: orthogonal, deterministic, " +

@@ -310,9 +310,9 @@ class QueryServerSpec extends SparkSpec {
       ms.groupBy(_.acct).view.mapValues(_.map(_.delta).sum).toMap
 
     val input = MemoryStream[StreamMovement]
-    val q = StateOperator.runStreamingSalted[StreamMovement, Long, Long](
+    val q = StateOperator.runStreamingSaltedDynamic[StreamMovement, Long, Long](
       input.toDS(), _.acct, _.tid, new CentsBalance,
-      salts = 8, hotKeys = Set(hot))
+      salts = 8, hot = new StateOperator.HotSet(Set(hot)))
       .toDF().writeStream
       .format("parquet")
       .option("path", s"$dir/out")
@@ -780,8 +780,9 @@ class QueryServerSpec extends SparkSpec {
       val ckpt = java.nio.file.Files.createTempDirectory("graft-qsrv-fsalt").toString
       val moves = (0L until 600L).map(i => StreamMovement(i % 20, i, i % 7 - 3))
       val input = MemoryStream[StreamMovement]
-      val q = StateOperator.runStreamingSalted[StreamMovement, Long, Long](
-        input.toDS(), _.acct, _.tid, new CentsBalance, salts = 4, hotKeys = Set(3L))
+      val q = StateOperator.runStreamingSaltedDynamic[StreamMovement, Long, Long](
+        input.toDS(), _.acct, _.tid, new CentsBalance, salts = 4,
+        hot = new StateOperator.HotSet(Set(3L)))
         .toDF().writeStream.format("noop")
         .option("checkpointLocation", ckpt).outputMode(OutputMode.Append()).start()
       try {
