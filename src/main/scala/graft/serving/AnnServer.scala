@@ -3,10 +3,7 @@ package graft.serving
 import graft.operators.Similarity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import java.io.{BufferedReader, InputStreamReader, PrintWriter}
-import java.net.{ServerSocket, Socket}
-import java.nio.charset.StandardCharsets
-import java.util.concurrent.atomic.AtomicBoolean
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 /** Live ANN SERVING over a PQ-compressed index — the query half of
   * the online vector pipeline ([[graft.streaming.StreamingAnn]] is
@@ -21,6 +18,10 @@ import java.util.concurrent.atomic.AtomicBoolean
   *   COUNT                   → {"count":N}
   *   anything else           → {"error":"..."}
   * }}}
+  *
+  * Connections follow [[LineServer]]: up to 64 clients, one thread
+  * each; request lines up to 1 MiB; every failed request answers one
+  * JSON `{"error":"..."}` line, and the connection keeps serving.
   *
   * Two serving modes, chosen at startup by index size (the
   * QueryServer degradation contract):
@@ -318,53 +319,37 @@ final class AnnServer(
           .getOrElse(codesFrame().select("cid").distinct().count())
         s"""{"count":$n}"""
       case other =>
-        s"""{"error":"unknown request ${other.take(40)}"}"""
+        LineServer.error(s"unknown request ${other.take(40)}")
     }
   }
 
-  private val server = new ServerSocket(port)
-  def boundPort: Int = server.getLocalPort
-  private val running = new AtomicBoolean(true)
   def isCached: Boolean = cached.isDefined
 
-  private def handle(sock: Socket): Unit = {
-    try {
-      sock.setTcpNoDelay(true)
-      val in = new BufferedReader(
-        new InputStreamReader(sock.getInputStream, StandardCharsets.UTF_8))
-      val out = new PrintWriter(sock.getOutputStream, true)
-      var line = in.readLine()
-      while (line != null && running.get()) {
-        val resp =
-          try respond(line)
-          catch { case e: Throwable =>
-            s"""{"error":"${Option(e.getMessage).getOrElse(e.getClass.getName).take(80).replace('"', '\'')}"}"""
-          }
-        out.println(resp)
-        line = in.readLine()
-      }
-    } catch { case _: Throwable => () }
-    finally { try sock.close() catch { case _: Throwable => () } }
-  }
+  private val lines = new LineServer("ann-server", port, respond)
+  def boundPort: Int = lines.boundPort
+
+  private val sc = codes.sparkSession.sparkContext
+  private val stop = new CountDownLatch(1)
+  private val refreshTag = s"ann-server-refresh-${java.util.UUID.randomUUID()}"
 
   private val refresher: Option[Thread] = refreshDir.orElse(storeDir).map { _ =>
     val t = new Thread(() => {
-      // thread-local tag: every Spark job this thread submits carries
-      // the group id, so tests (and operators) can attribute refresh
-      // cost precisely
-      codes.sparkSession.sparkContext.setJobGroup(
-        "ann-server-refresh", "incremental ANN index refresh", false)
-      while (running.get()) {
+      // thread-local: every Spark job this thread submits carries the
+      // group id, so tests (and operators) can attribute refresh cost
+      // precisely, and this server's own tag, which close() cancels
+      sc.setJobGroup("ann-server-refresh", "incremental ANN index refresh", false)
+      sc.addJobTag(refreshTag)
+      while (!stop.await(refreshMillis, TimeUnit.MILLISECONDS)) {
         try {
-          Thread.sleep(refreshMillis)
           // incremental (sink mode: only unseen committed files load;
           // store mode: only a moved manifest version reloads) — an
           // idle tick runs no Spark job at all. The refresher is the
           // only writer of `snap`, so read-modify-set is race-free.
           snap.set(refreshStep(snap.get()))
         } catch {
-          case _: InterruptedException => ()
-          case _: Throwable => () // mid-commit sink read: keep serving the old snapshot
+          // a mid-commit sink read, or close() cancelling the refresh:
+          // keep serving the old snapshot
+          case _: Throwable => ()
         }
       }
     }, "ann-server-refresher")
@@ -373,39 +358,25 @@ final class AnnServer(
     t
   }
 
-  private val acceptor = new Thread(() => {
-    try {
-      while (running.get()) {
-        val sock = server.accept()
-        val t = new Thread(() => handle(sock), "ann-server-client")
-        t.setDaemon(true)
-        t.start()
-      }
-    } catch { case _: Throwable => () }
-  }, "ann-server-acceptor")
-  acceptor.setDaemon(true)
-  acceptor.start()
-
+  /** Stops serving and refreshing: wakes the refresher, cancels the
+    * refresh it may be running, and waits (bounded) for it to exit, so
+    * no refresh job starts once close() has returned.
+    */
   override def close(): Unit = {
-    running.set(false)
-    try server.close() catch { case _: Throwable => () }
+    stop.countDown()
+    lines.close()
+    refresher.foreach { t =>
+      val deadline = System.nanoTime() + 10000L * 1000000L
+      while (t.isAlive && System.nanoTime() < deadline) {
+        sc.cancelJobsWithTag(refreshTag)
+        t.join(20)
+      }
+    }
   }
 }
 
-/** Minimal line-protocol client for [[AnnServer]]. */
-final class AnnClient(host: String, port: Int) extends AutoCloseable {
-  private val sock = new Socket(host, port)
-  sock.setTcpNoDelay(true)
-  private val in = new BufferedReader(
-    new InputStreamReader(sock.getInputStream, StandardCharsets.UTF_8))
-  private val out = new PrintWriter(sock.getOutputStream, true)
-
-  def request(line: String): String = {
-    out.println(line)
-    val r = in.readLine()
-    require(r != null, "server closed the connection")
-    r
-  }
+/** Typed client for [[AnnServer]]. */
+final class AnnClient(host: String, port: Int) extends LineClient(host, port) {
 
   /** Top-k parsed to (cid, dot_pq) in rank order. */
   def topk(qvec: Seq[Float], k: Int): Seq[(Long, Long)] =
@@ -418,10 +389,6 @@ final class AnnClient(host: String, port: Int) extends AutoCloseable {
     AnnClient.CountRe.findFirstMatchIn(request("COUNT"))
       .map(_.group(1).toLong)
       .getOrElse(sys.error("malformed COUNT response"))
-
-  override def close(): Unit = {
-    try sock.close() catch { case _: Throwable => () }
-  }
 }
 
 object AnnClient {

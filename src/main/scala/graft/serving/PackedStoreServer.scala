@@ -3,10 +3,6 @@ package graft.serving
 import graft.operators.Incremental
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import java.io.{BufferedReader, InputStreamReader, PrintWriter}
-import java.net.{ServerSocket, Socket}
-import java.nio.charset.StandardCharsets
-import java.util.concurrent.atomic.AtomicBoolean
 
 /** TIME-TRAVEL reads over the wire — the CDC packed store (the
   * training-consumer output, manifest-committed by
@@ -30,6 +26,10 @@ import java.util.concurrent.atomic.AtomicBoolean
   *                      → same rows shape, doc_id ∈ [lo, hi]
   *   anything else      → {"error":"..."}
   * }}}
+  *
+  * Connections follow [[LineServer]]: up to 64 clients, one thread
+  * each; request lines up to 1 MiB; every failed request answers one
+  * JSON `{"error":"..."}` line, and the connection keeps serving.
   *
   * SCAN reads exactly the pinned manifest's files of one `grp`
   * partition (pruned — nothing else opens), ordered (seq_id,
@@ -70,10 +70,6 @@ final class PackedStoreServer(
     txDir: Option[String] = None,
     maxResponseRows: Int = 100_000) extends AutoCloseable {
 
-  private val running = new AtomicBoolean(true)
-  private val server = new ServerSocket(port)
-  def boundPort: Int = server.getLocalPort
-
   private def latest: Option[Long] =
     graft.sources.ManifestStore.latestVersion(storeDir)
 
@@ -83,7 +79,7 @@ final class PackedStoreServer(
       case "VERSION" =>
         latest match {
           case Some(v) => s"""{"version":$v}"""
-          case None => s"""{"error":"empty store (no manifest)"}"""
+          case None => LineServer.error("empty store (no manifest)")
         }
       case "HISTORY" if parts.length == 1 =>
         // the retained commit log from metadata alone (DESCRIBE
@@ -105,7 +101,7 @@ final class PackedStoreServer(
         // stores' versions for whatever else it consults — N reads,
         // ONE consistent combination (rows 132 + 133 composed)
         txDir match {
-          case None => s"""{"error":"no tx log behind this store"}"""
+          case None => LineServer.error("no tx log behind this store")
           case Some(td) =>
             val tx = graft.sources.TxLog.read(td,
               if (parts.length == 2) Some(parts(1).toLong) else None)
@@ -116,7 +112,7 @@ final class PackedStoreServer(
       case "COUNT" if parts.length <= 2 =>
         val v = if (parts.length == 2) parts(1).toLong
           else latest.getOrElse(
-            return s"""{"error":"empty store (no manifest)"}""")
+            return LineServer.error("empty store (no manifest)"))
         // metadata-first: the stats sidecar's per-file row counts
         // answer COUNT with zero file opens and zero Spark jobs; a
         // snapshot whose files predate row-count harvesting falls
@@ -143,7 +139,7 @@ final class PackedStoreServer(
             scanRows(grp, v, idRange = Some((lo, hi)), limit, after)
         }
       case other =>
-        s"""{"error":"unknown request ${other.take(40)}"}"""
+        LineServer.error(s"unknown request ${other.take(40)}")
     }
   }
 
@@ -176,24 +172,24 @@ final class PackedStoreServer(
         case "AT" if i + 1 < toks.length && v.isEmpty
             && toks(i + 1).toUpperCase == "TX" =>
           val td = txDir.getOrElse(
-            return Left(s"""{"error":"no tx log behind this store"}"""))
+            return Left(LineServer.error("no tx log behind this store")))
           val txId =
             if (i + 2 < toks.length && toks(i + 2).forall(_.isDigit)) {
               i += 3; Some(toks(i - 1).toLong)
             } else { i += 2; None }
           val tx = graft.sources.TxLog.read(td, txId)
           v = Some(tx.versions.getOrElse("packed",
-            return Left(s"""{"error":"tx ${tx.txId} pins no packed store"}""")))
+            return Left(LineServer.error(s"tx ${tx.txId} pins no packed store"))))
         case "LIMIT" if i + 1 < toks.length && limit.isEmpty =>
           limit = Some(toks(i + 1).toInt); i += 2
         case "AFTER" if i + 2 < toks.length && after.isEmpty =>
           after = Some((toks(i + 1).toLong, toks(i + 2).toLong)); i += 3
         case t =>
-          return Left(s"""{"error":"bad clause ${t.take(40)}"}""")
+          return Left(LineServer.error(s"bad clause ${t.take(40)}"))
       }
     }
     val resolved = v.orElse(latest).getOrElse(
-      return Left(s"""{"error":"empty store (no manifest)"}"""))
+      return Left(LineServer.error("empty store (no manifest)")))
     Right((resolved, limit, after))
   }
 
@@ -232,64 +228,19 @@ final class PackedStoreServer(
     s"""{"version":$v,"rows":[${rows.mkString(",")}]$t}"""
   }
 
-  private def handle(sock: Socket): Unit = {
-    try {
-      sock.setTcpNoDelay(true)
-      val in = new BufferedReader(
-        new InputStreamReader(sock.getInputStream, StandardCharsets.UTF_8))
-      val out = new PrintWriter(sock.getOutputStream, true)
-      var line = in.readLine()
-      while (line != null && running.get()) {
-        val resp =
-          try respond(line)
-          catch { case e: Throwable =>
-            // a pinned version aged out of retention surfaces here as
-            // ManifestStore.files' require — the defined-error path
-            s"""{"error":"${Option(e.getMessage).getOrElse(e.getClass.getName).take(120).replace('"', '\'')}"}"""
-          }
-        out.println(resp)
-        line = in.readLine()
-      }
-    } catch { case _: Throwable => () }
-    finally { try sock.close() catch { case _: Throwable => () } }
-  }
+  // a pinned version aged out of retention surfaces as
+  // ManifestStore.files' require: the defined error line
+  private val lines = new LineServer("packed-server", port, respond)
+  def boundPort: Int = lines.boundPort
 
-  private val acceptor = new Thread(() => {
-    try {
-      while (running.get()) {
-        val sock = server.accept()
-        val t = new Thread(() => handle(sock), "packed-server-client")
-        t.setDaemon(true)
-        t.start()
-      }
-    } catch { case _: Throwable => () }
-  }, "packed-server-acceptor")
-  acceptor.setDaemon(true)
-  acceptor.start()
-
-  override def close(): Unit = {
-    running.set(false)
-    try server.close() catch { case _: Throwable => () }
-  }
+  override def close(): Unit = lines.close()
 }
 
-/** Minimal line-protocol client for [[PackedStoreServer]]. Non-final
-  * so a drill can interpose on `scan` (e.g. inject a publish between
-  * pages to pin down [[scanAll]]'s snapshot stability).
+/** Typed client for [[PackedStoreServer]]. Non-final so a drill can
+  * interpose on `scan` (e.g. inject a publish between pages to pin
+  * down [[scanAll]]'s snapshot stability).
   */
-class PackedStoreClient(host: String, port: Int) extends AutoCloseable {
-  private val sock = new Socket(host, port)
-  sock.setTcpNoDelay(true)
-  private val in = new BufferedReader(
-    new InputStreamReader(sock.getInputStream, StandardCharsets.UTF_8))
-  private val out = new PrintWriter(sock.getOutputStream, true)
-
-  def request(line: String): String = {
-    out.println(line)
-    val r = in.readLine()
-    require(r != null, "server closed the connection")
-    r
-  }
+class PackedStoreClient(host: String, port: Int) extends LineClient(host, port) {
 
   /** Raw HISTORY response line: the retained commit log. */
   def history(): String = request("HISTORY")
@@ -391,10 +342,6 @@ class PackedStoreClient(host: String, port: Int) extends AutoCloseable {
     val vs = PackedStoreClient.KvRe.findAllMatchIn(r)
       .map(m => m.group(1) -> m.group(2).toLong).toMap - "tx" - "batch"
     (id, vs)
-  }
-
-  override def close(): Unit = {
-    try sock.close() catch { case _: Throwable => () }
   }
 }
 

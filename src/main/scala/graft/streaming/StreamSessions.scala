@@ -77,19 +77,23 @@ object StreamSessions {
     // no-data batch is one whole micro-batch of pure fixed cost.
     ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
       noDataBatches.toString)
-    val provider = providerClass(parent, stateStore)
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-    if (provider == RocksDbProvider) {
-      // changelog checkpointing: per-batch durability = the batch's
-      // delta, with SST snapshots uploaded in the background — the
-      // per-micro-batch commit cost stops scaling with total state
-      // size (the 100 TB-right default; also measured ~2x on the
-      // small-batch gate queries, where full-snapshot uploads per
-      // batch dominated)
-      ss.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-    }
+    stateStoreConf(providerClass(parent, stateStore))
+      .foreach { case (k, v) => ss.conf.set(k, v) }
     ss
   }
+
+  /** The state-store settings of a streaming session on `provider`;
+    * the test session takes them from here too, so the two never drift.
+    * On RocksDB they turn on changelog checkpointing: per-batch
+    * durability = the batch's delta, with SST snapshots uploaded in the
+    * background — the per-micro-batch commit cost stops scaling with
+    * total state size (the 100 TB-right default; also measured ~2x on
+    * the small-batch gate queries, where full-snapshot uploads per
+    * batch dominated), and the state store keeps the per-batch change
+    * feed a QueryServer refreshes from.
+    */
+  private[graft] def stateStoreConf(provider: String): Seq[(String, String)] =
+    ("spark.sql.streaming.stateStore.providerClass" -> provider) +:
+      (if (provider != RocksDbProvider) Nil
+       else Seq("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true"))
 }

@@ -1,10 +1,6 @@
 package graft.tgraph.query
 
-import java.io.{BufferedReader, InputStreamReader, PrintWriter}
-import java.net.{ServerSocket, Socket, SocketException}
-import java.nio.charset.StandardCharsets
-import java.util.concurrent.Executors
-import java.util.concurrent.atomic.AtomicBoolean
+import graft.serving.LineServer
 
 /** MULTI-NAMESPACE queryable state — one live endpoint fronting the
   * state stores of SEVERAL running streaming queries, the analog of
@@ -23,6 +19,11 @@ import java.util.concurrent.atomic.AtomicBoolean
   *   anything else              → {"error":"..."}
   * }}}
   *
+  * Connections follow [[graft.serving.LineServer]]: up to 64
+  * clients, one thread each; request lines up to 1 MiB; every failed
+  * request answers one JSON `{"error":"..."}` line, and the
+  * connection keeps serving.
+  *
   * Consistency contract: each namespace runs as its OWN streaming
   * query with its own committed-batch sequence, so one answer pins ONE
   * epoch of ONE namespace (the response's `"batch"` field); answers
@@ -40,11 +41,7 @@ final class MultiQueryServer(
     port: Int = 0) extends AutoCloseable {
   require(namespaces.nonEmpty, "at least one namespace required")
 
-  private val running = new AtomicBoolean(true)
-  private val server = new ServerSocket(port)
-  private val pool = Executors.newFixedThreadPool(8)
-
-  def boundPort: Int = server.getLocalPort
+  def boundPort: Int = lines.boundPort
 
   /** The committed epoch namespace `ns`'s next answer will reflect. */
   def servedBatchId(ns: String): Long = namespaces(ns).servedBatchId
@@ -52,13 +49,9 @@ final class MultiQueryServer(
   private def respond(req: String): String = {
     val parts = req.trim.split("\\s+", 3)
     if (!parts(0).equalsIgnoreCase("NS") || parts.length < 3)
-      s"""{"error":"requests must be NS <namespace> <request>"}"""
+      LineServer.error("requests must be NS <namespace> <request>")
     else namespaces.get(parts(1)) match {
-      case None =>
-        // raw client input inside a JSON string: strip the two
-        // JSON-breaking characters (the exception path does the same)
-        val safe = parts(1).take(40).replace('"', '\'').replace('\\', '/')
-        s"""{"error":"unknown namespace $safe"}"""
+      case None => LineServer.error(s"unknown namespace ${parts(1).take(40)}")
       case Some(inner) =>
         val r = inner.respond(parts(2))
         if (r.startsWith("{")) s"""{"ns":"${parts(1)}",${r.drop(1)}"""
@@ -66,46 +59,10 @@ final class MultiQueryServer(
     }
   }
 
-  private def handle(sock: Socket): Unit = {
-    try {
-      sock.setTcpNoDelay(true)
-      val in = new BufferedReader(
-        new InputStreamReader(sock.getInputStream, StandardCharsets.UTF_8))
-      val out = new PrintWriter(sock.getOutputStream, true)
-      var line = in.readLine()
-      while (line != null && running.get()) {
-        val resp =
-          try respond(line)
-          catch { case e: Throwable =>
-            s"""{"error":"${Option(e.getMessage).getOrElse(e.getClass.getName).take(80).replace('"', '\'')}"}"""
-          }
-        out.println(resp)
-        line = in.readLine()
-      }
-    } catch { case _: Throwable => () }
-    finally { try sock.close() catch { case _: Throwable => () } }
-  }
-
-  private val acceptor = new Thread(() => {
-    while (running.get()) {
-      try {
-        val sock = server.accept()
-        pool.submit(new Runnable { def run(): Unit = handle(sock) })
-      } catch {
-        case _: SocketException => () // closed during accept — shutting down
-        case e: Throwable =>
-          if (running.get())
-            System.err.println(s"[multi-query-server] accept failed: ${e.getMessage}")
-      }
-    }
-  }, "multi-query-server-accept")
-  acceptor.setDaemon(true)
-  acceptor.start()
+  private val lines = new LineServer("multi-query-server", port, respond)
 
   override def close(): Unit = {
-    running.set(false)
-    try server.close() catch { case _: Throwable => () }
-    pool.shutdownNow()
+    lines.close()
     namespaces.values.foreach { s =>
       try s.close() catch { case _: Throwable => () }
     }

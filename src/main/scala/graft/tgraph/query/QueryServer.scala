@@ -5,10 +5,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
-import java.io.{BufferedReader, InputStreamReader, PrintWriter}
-import java.net.{ServerSocket, Socket, SocketException}
-import java.nio.charset.StandardCharsets
-import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+import graft.serving.{LineClient, LineServer}
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong, AtomicReference}
 import scala.util.control.NonFatal
 
@@ -77,6 +76,11 @@ import scala.util.control.NonFatal
   *   COUNT               → {"batch":B,"count":N}
   *   anything else       → {"error":"..."}
   * }}}
+  *
+  * Connections follow [[graft.serving.LineServer]]: up to 64
+  * clients, one thread each; request lines up to 1 MiB; every failed
+  * request answers one JSON `{"error":"..."}` line, and the
+  * connection keeps serving.
   *
   * Every `rows` response is bounded by `maxResponseRows` (and by the
   * request's own LIMIT if smaller). A response that left matching rows
@@ -147,10 +151,9 @@ final class QueryServer(
     new AtomicReference[Snapshot](Snapshot(-1L, Some(Map.empty)))
   private val warnedOversize = new AtomicBoolean(false)
   private val running = new AtomicBoolean(true)
-  private val server = new ServerSocket(port)
 
   /** Ephemeral-port friendly: the port clients should connect to. */
-  def boundPort: Int = server.getLocalPort
+  def boundPort: Int = lines.boundPort
 
   /** The committed epoch the NEXT answer will reflect. */
   def servedBatchId: Long = current.get().batchId
@@ -263,7 +266,7 @@ final class QueryServer(
 
   // Every Spark job this server starts carries `jobTag`, so close() can
   // cancel them; threads started below inherit the caller's job group.
-  private val jobTag = s"graft-query-server-${java.util.UUID.randomUUID()}"
+  private[tgraph] val jobTag = s"graft-query-server-${java.util.UUID.randomUUID()}"
   private val sc = spark.sparkContext
   private val stop = new CountDownLatch(1)
 
@@ -275,23 +278,6 @@ final class QueryServer(
 
   // Serve from the newest committed batch available at start (if any).
   refreshNow()
-
-  private val refresher = new Thread(() => {
-    sc.addJobTag(jobTag)
-    var more = true
-    while (more) {
-      try refreshOnce()
-      catch { case e: Throwable =>
-        if (running.get())
-          System.err.println(s"[query-server] refresh failed: ${e.getMessage}")
-      }
-      more = !stop.await(refreshMillis, TimeUnit.MILLISECONDS)
-    }
-  }, "query-server-refresh")
-  refresher.setDaemon(true)
-  refresher.start()
-
-  private val pool = Executors.newFixedThreadPool(8)
 
   /** Degraded-mode hot-key LRU, valid for ONE committed batch: maps
     * key → Some(value) | None (key proven absent at that batch —
@@ -544,49 +530,33 @@ final class QueryServer(
             s"""{"batch":${snap.batchId},"count":$n}"""
         }
       case other =>
-        s"""{"error":"unknown request ${other.take(40)}"}"""
+        LineServer.error(s"unknown request ${other.take(40)}")
     }
   }
 
-  /** Looping per-client handler, the `LoopingClientHandler` +
-    * `StringClientHandler` shape: serve request lines until EOF.
-    */
-  private def handle(sock: Socket): Unit = {
-    try {
-      sock.setTcpNoDelay(true) // request-response: don't Nagle-buffer
-      val in = new BufferedReader(
-        new InputStreamReader(sock.getInputStream, StandardCharsets.UTF_8))
-      val out = new PrintWriter(sock.getOutputStream, true)
-      var line = in.readLine()
-      while (line != null && running.get()) {
-        val resp =
-          try respond(line)
-          catch { case e: Throwable =>
-            s"""{"error":"${Option(e.getMessage).getOrElse(e.getClass.getName).take(80).replace('"', '\'')}"}"""
-          }
-        out.println(resp)
-        line = in.readLine()
-      }
-    } catch { case _: Throwable => () }
-    finally { try sock.close() catch { case _: Throwable => () } }
+  // built inside the tag bracket: its handler threads inherit the tag
+  // (degraded-mode request jobs are this server's, cancelled by close())
+  // along with the caller's job group
+  private val lines = {
+    sc.addJobTag(jobTag)
+    try new LineServer("query-server", port, respond)
+    finally sc.removeJobTag(jobTag)
   }
 
-  private val acceptor = new Thread(() => {
-    sc.addJobTag(jobTag) // the handler threads it spawns inherit the tag
-    while (running.get()) {
-      try {
-        val sock = server.accept()
-        pool.submit(new Runnable { def run(): Unit = handle(sock) })
-      } catch {
-        case _: SocketException => () // closed during accept — shutting down
-        case e: Throwable =>
-          if (running.get())
-            System.err.println(s"[query-server] accept failed: ${e.getMessage}")
+  private val refresher = new Thread(() => {
+    sc.addJobTag(jobTag)
+    var more = true
+    while (more) {
+      try refreshOnce()
+      catch { case e: Throwable =>
+        if (running.get())
+          System.err.println(s"[query-server] refresh failed: ${e.getMessage}")
       }
+      more = !stop.await(refreshMillis, TimeUnit.MILLISECONDS)
     }
-  }, "query-server-accept")
-  acceptor.setDaemon(true)
-  acceptor.start()
+  }, "query-server-refresh")
+  refresher.setDaemon(true)
+  refresher.start()
 
   /** Stops serving and refreshing. A refresh or degraded-mode request
     * may be inside a Spark job: its jobs are cancelled by tag, and
@@ -597,8 +567,8 @@ final class QueryServer(
   override def close(): Unit = {
     running.set(false)
     stop.countDown()
-    try server.close() catch { case _: Throwable => () }
-    pool.shutdownNow()
+    sc.cancelJobsWithTag(jobTag) // before close() waits on the handlers
+    lines.close()
     refresher.join(QueryServer.ClosePollMs)
     val deadline = System.nanoTime() + QueryServer.CloseWaitMs * 1000000L
     while ((refresher.isAlive || jobsActive) && System.nanoTime() < deadline) {
@@ -671,24 +641,10 @@ object QueryServer {
     }
 }
 
-/** Minimal blocking client for the [[QueryServer]] line protocol — the
-  * `runtime/StringClient.java` shape; used by specs and probes, and a
-  * template for genuinely external (non-JVM) clients.
+/** Typed client for the [[QueryServer]] line protocol (and, through
+  * `request`, [[MultiQueryServer]]'s); a template for external clients.
   */
-final class QueryClient(host: String, port: Int) extends AutoCloseable {
-  private val sock = new Socket(host, port)
-  sock.setTcpNoDelay(true)
-  private val in = new BufferedReader(
-    new InputStreamReader(sock.getInputStream, StandardCharsets.UTF_8))
-  private val out = new PrintWriter(sock.getOutputStream, true)
-
-  def request(line: String): String = {
-    out.println(line)
-    val r = in.readLine()
-    require(r != null, "server closed the connection")
-    r
-  }
-
+final class QueryClient(host: String, port: Int) extends LineClient(host, port) {
   def point(keys: Seq[Long]): String = request(s"POINT ${keys.mkString(",")}")
 
   /** Paged point request: `LIMIT limit`, optional `AFTER`/`AT`. */
@@ -703,10 +659,6 @@ final class QueryClient(host: String, port: Int) extends AutoCloseable {
   def pointRows(keys: Seq[Long]): Seq[(Long, Long)] =
     QueryClient.RowRe.findAllMatchIn(point(keys))
       .map(m => (m.group(1).toLong, m.group(2).toLong)).toSeq
-
-  override def close(): Unit = {
-    try sock.close() catch { case _: Throwable => () }
-  }
 }
 
 object QueryClient {

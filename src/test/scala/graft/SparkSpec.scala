@@ -14,7 +14,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val builder = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .withExtensions(new graft.functions.GraftExtensions)
@@ -23,12 +23,14 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // specs exercise streaming state on the library's production
-      // default (RocksDB — see StreamSessions); SPARK_GRAFT_STATESTORE
-      // =hdfs opts the whole suite back onto the heap provider
-      .config("spark.sql.streaming.stateStore.providerClass",
-        graft.streaming.StreamSessions.providerClassFromEnv)
-      .getOrCreate()
+    // specs exercise streaming state on the library's production
+    // settings (RocksDB with changelog checkpointing — see
+    // StreamSessions); SPARK_GRAFT_STATESTORE=hdfs opts the whole suite
+    // back onto the heap provider
+    graft.streaming.StreamSessions
+      .stateStoreConf(graft.streaming.StreamSessions.providerClassFromEnv)
+      .foreach { case (k, v) => builder.config(k, v) }
+    val s = builder.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

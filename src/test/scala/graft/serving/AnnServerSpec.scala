@@ -191,4 +191,41 @@ class AnnServerSpec extends SparkSpec {
     }
     graft.sources.FileIO.deleteScratch(new java.io.File(dir))
   }
+
+  test("close() stops the refresher: no refresh job starts once it returns") {
+    val cb = Seq((0, 0, 0, 1000L), (0, 1, 0, -1000L)).toDF("sub", "cell", "pos", "mean_milli")
+    def codes(cid: Long) = Seq((cid, 0, cid % 2)).toDF("cid", "sub", "cell").coalesce(1)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ann-close")
+    val staged = java.nio.file.Files.createTempDirectory("graft-ann-staged")
+    codes(1L).write.mode("overwrite").parquet(dir.toString)
+    codes(2L).write.mode("overwrite").parquet(staged.toString)
+    val late = java.nio.file.Files.list(staged).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .find(p => p.getFileName.toString.endsWith(".parquet")).get
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        if (Option(js.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == "ann-server-refresh"))
+          starts.add(js.time)
+        ()
+      }
+    }
+    val srv = new AnnServer(codes(0L).limit(0), cb, 1, 1,
+      refreshDir = Some(dir.toString), refreshMillis = 500L)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // a file the next refresh tick would absorb with Spark jobs
+      java.nio.file.Files.move(late, dir.resolve("part-late.parquet"))
+      srv.close()
+      val closedAt = System.currentTimeMillis()
+      Thread.sleep(1200) // past the next tick; listener events are async
+      val after = starts.toArray(Array.empty[java.lang.Long]).count(_ > closedAt)
+      assert(after == 0, s"$after refresh jobs started after close() returned")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      srv.close()
+      graft.sources.FileIO.deleteScratch(dir.toFile)
+      graft.sources.FileIO.deleteScratch(staged.toFile)
+    }
+  }
 }

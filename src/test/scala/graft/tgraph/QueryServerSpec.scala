@@ -765,6 +765,8 @@ class QueryServerSpec extends SparkSpec {
     // refresh is one whole-state pass
     val plain = spark.newSession()
     plain.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    plain.conf.set(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "false")
     val noLog = exactAcrossBatches(plain)
     assert(noLog.incrementalRefreshes.get() == 0L)
     assert(noLog.fullRefreshes.get() == 4L)
@@ -839,6 +841,38 @@ class QueryServerSpec extends SparkSpec {
         exact(); assert(!degraded())
         assert(served(client)._2.keySet == Set(101L, 102L))
       } finally { client.close(); server.close() }
+    } finally s.close()
+  }
+
+  test("a degraded-mode request's Spark job carries the server's job tag " +
+    "and the constructing thread's job group") {
+    val s = new BankStream(
+      StreamSessions.scoped(spark, 4, noDataBatches = false), ttl = 1.hour)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.add(js.properties); ()
+      }
+    }
+    try {
+      s.batch(churn(0, 40, 0))
+      sc.setJobGroup("qsrv-owner", "query server owner", interruptOnCancel = false)
+      // maxStateRows = 1: degraded, so a missed key runs a Spark job
+      val server =
+        try new QueryServer(spark, s.ckpt, refreshMillis = 3600000L, maxStateRows = 1L)
+        finally sc.clearJobGroup()
+      val client = new QueryClient("localhost", server.boundPort)
+      try {
+        sc.addSparkListener(listener)
+        val before = server.degradedCacheMisses
+        client.point(Seq(-1L))
+        assert(server.degradedCacheMisses > before, "the request was served without a job")
+        def tagged = jobs.toArray(Array.empty[java.util.Properties]).toSeq.filter(p =>
+          Option(p.getProperty("spark.job.tags")).exists(_.split(",").contains(server.jobTag)))
+        eventually(5000) { if (tagged.nonEmpty) Some(()) else None }
+        assert(tagged.forall(_.getProperty("spark.jobGroup.id") == "qsrv-owner"))
+      } finally { sc.removeSparkListener(listener); client.close(); server.close() }
     } finally s.close()
   }
 
